@@ -48,10 +48,10 @@ private[graft] object SnapBucket {
     * table with an INT key and NO stamp predates the rule — its
     * committed `_gbucket` directories are int-hash keyed, and serving
     * them under long-hash readers would silently prune wrong; the
-    * catalog refuses such tables toward a rewrite
-    * ([[GraftTable.bucketSpec]]). Long/string keys hash identically
-    * under both rules, so unstamped tables with those keys stay
-    * servable. */
+    * catalog serves such tables without their bucket layout until they
+    * are recreated with CTAS ([[GraftTable.bucketSpec]]). Long/string
+    * keys hash identically under both rules, so unstamped tables with
+    * those keys stay servable. */
   val hashVerProp = "graft.partition.bucket.hash"
   val hashVer = "long"
 

@@ -341,8 +341,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       // stamp the bucket-hash discipline at CREATE ([[SnapBucket
       // .hashVerProp]]): int keys hash AS LONGS since r19, which
       // re-keys every int-keyed directory committed under the earlier
-      // int-hash rule — the stamp is what lets a reader REFUSE a
-      // legacy table instead of silently pruning into the wrong dirs
+      // int-hash rule — the stamp is what lets a reader drop a legacy
+      // table's bucket layout instead of silently pruning into the
+      // wrong dirs
       bucket.map(_ => SnapBucket.hashVerProp -> SnapBucket.hashVer) ++
       transform.map(t => SnapTransform.prop -> t.render)
     GraftTable.writeMeta(root, schema, props)

@@ -96,13 +96,20 @@ private[catalog] class ChangesTable(fullName: String, root: String)
     * e).table("snap.ns.t.changes")` plans exactly the micro-batch
     * partitions for the version range `(s, e]` — same effects, same
     * schema, no checkpoint. `startingVersion` defaults to 0 (initial
-    * snapshot + every retained effect), `endingVersion` to the head. */
+    * snapshot + every retained effect), `endingVersion` to the head.
+    *
+    * Unlike Delta's `table_changes`, whose starting version is
+    * INCLUSIVE, `startingVersion` here is EXCLUSIVE, like a streaming
+    * offset: `startingVersion = s` returns the effects of commits s+1
+    * through e, never those of commit s itself. Code ported from Delta
+    * CDF passes `s - 1` to read the same commits. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val full = schema()
     () => new Scan with Batch {
       override def readSchema(): StructType = full
       override def description(): String = s"graft change feed $fullName"
-      private lazy val stream = new ChangesMicroBatchStream(root, dataSchema, options)
+      private lazy val stream =
+        new ChangesMicroBatchStream(root, dataSchema, options, batch = true)
       override def toBatch: Batch = this
       override def planInputPartitions(): Array[InputPartition] = {
         val s0 = Option(options.get(GraftMicroBatchStream.StartingVersionOption))
@@ -154,7 +161,7 @@ private[catalog] object ChangePartition {
 }
 
 private[catalog] class ChangesMicroBatchStream(root: String,
-    dataSchema: StructType, options: CaseInsensitiveStringMap)
+    dataSchema: StructType, options: CaseInsensitiveStringMap, batch: Boolean = false)
   extends MicroBatchStream
   with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
   with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
@@ -373,7 +380,11 @@ private[catalog] class ChangesMicroBatchStream(root: String,
     require(oldest > 0, s"no committed snapshot under $root")
     require(s0 == 0 || s0 >= oldest,
       s"change-feed offset $s0 of $root is beyond retention (oldest " +
-        s"retained version is $oldest) — restart from a fresh checkpoint")
+        s"retained version is $oldest) — " + (
+        if (batch) "a batch startingVersion is EXCLUSIVE (the read returns " +
+          "the commits after it; Delta's table_changes is inclusive): pass " +
+          s"a version >= $oldest, or 0 for the initial snapshot"
+        else "restart from a fresh checkpoint"))
     val from = if (s0 == 0) oldest else s0
     val out = Seq.newBuilder[InputPartition]
     // commit wall-clock per version step, one metadata read

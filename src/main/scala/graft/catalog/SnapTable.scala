@@ -288,10 +288,13 @@ class GraftTable(tableName: String, val root: String,
     * [[legacyIntBucket]]) DEGRADES to None rather than refusing or
     * serving wrongly: the synthetic segment is derived (the key column
     * stays in the data files), so scans without the spec read every
-    * row value-exactly — the table merely loses bucket pruning and SPJ
-    * until a rewrite (compaction, CTAS) re-stamps it. Refusing instead
-    * would dead-end even the remediation read; pruning with the wrong
-    * hash would be silent corruption. */
+    * row value-exactly — the table merely loses bucket pruning and SPJ.
+    * No write path re-stamps a table in place (compaction does not,
+    * and SET TBLPROPERTIES of the bucket prop is refused): to get the
+    * layout back, recreate the table with CTAS, which writes long-hash
+    * dirs and the stamp. Refusing instead would dead-end even the
+    * remediation read; pruning with the wrong hash would be silent
+    * corruption. */
   def bucketSpec: Option[(String, Int)] =
     meta.flatMap { m =>
       val spec = SnapBucket.of(m._2)

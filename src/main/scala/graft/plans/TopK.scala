@@ -510,6 +510,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectPlannerStrategy(_ => AsOfStrategy)
     e.injectOptimizerRule(_ => PushFilterThroughTopK)
     e.injectOptimizerRule(_ => RewriteRowNumberTopK)
+    e.injectOptimizerRule(_ => CoalesceSmallRootSort)
     // Scalar extension functions: any session built with this extensions
     // class gets the codegen'd expressions on its SQL surface without a
     // manual register call.
@@ -583,7 +584,8 @@ object TopK {
 
   /** Idempotent runtime injection for sessions not built with
     * [[GraftExtensions]] (e.g. a driver-owned session). Installs ALL
-    * graft planner/optimizer extensions (TopK + AsOf). */
+    * graft planner/optimizer extensions (TopK + AsOf + the small
+    * root-sort coalesce). */
   def ensure(spark: SparkSession): Unit = {
     val exp = spark.asInstanceOf[classic.SparkSession].experimental
     exp.synchronized {
@@ -595,6 +597,8 @@ object TopK {
         exp.extraOptimizations = exp.extraOptimizations :+ PushFilterThroughTopK
       if (!exp.extraOptimizations.contains(RewriteRowNumberTopK))
         exp.extraOptimizations = exp.extraOptimizations :+ RewriteRowNumberTopK
+      if (!exp.extraOptimizations.contains(CoalesceSmallRootSort))
+        exp.extraOptimizations = exp.extraOptimizations :+ CoalesceSmallRootSort
     }
     // Keep the SQL-function surface in lockstep with the extensions
     // class: ensure() is the runtime-injection twin of GraftExtensions,

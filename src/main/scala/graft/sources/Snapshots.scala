@@ -914,19 +914,17 @@ object Snapshots {
         s"cannot tag $name: version $version of $root is not committed")
     // one ref namespace: VERSION AS OF resolves tags before branches,
     // so a tag shadowing a branch (or vice versa) would silently
-    // re-point readers — refuse the collision (legacy direct check),
-    // then take the ATOMIC claim so a concurrent branch creator can't
-    // slip through the check-then-act window ([[claimRef]])
-    require(branchFork(root, name).isEmpty,
-      s"'$name' is a BRANCH of $root; tags and branches share the " +
-        "VERSION AS OF namespace")
-    claimRef(root, name, "tag")
-    val tmp = commitsDir(root).resolve(
-      s".tmp_tag_${ProcessHandle.current().pid()}_${stageSeq.incrementAndGet()}")
-    Files.write(tmp, version.toString.getBytes(UTF_8))
-    Files.move(tmp, commitsDir(root).resolve(s"$name.tag"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    // re-point readers — refuse the collision under the name's ref
+    // lock, so a concurrent branch creator can't slip in ([[withRefLock]])
+    withRefLock(root, name) {
+      if (branchFork(root, name).isDefined) throw sharedNamespace(root, name, "BRANCH")
+      val tmp = commitsDir(root).resolve(
+        s".tmp_tag_${ProcessHandle.current().pid()}_${stageSeq.incrementAndGet()}")
+      Files.write(tmp, version.toString.getBytes(UTF_8))
+      Files.move(tmp, commitsDir(root).resolve(s"$name.tag"),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
   }
 
   /** The version a tag points at, or None if the tag doesn't exist. */
@@ -936,50 +934,38 @@ object Snapshots {
     else Some(new String(Files.readAllBytes(p), UTF_8).trim.toLong)
   }
 
-  private def refClaimPath(root: String, name: String): Path =
-    commitsDir(root).resolve(s"$name.refkind")
+  private def sharedNamespace(root: String, name: String, existing: String) =
+    new IllegalStateException(s"'$name' is a $existing of $root; tags and " +
+      "branches share the VERSION AS OF namespace")
 
-  /** ATOMIC shared-namespace claim for ref `name` (r20): tags and
-    * branches share the VERSION AS OF namespace, and the direct
-    * existence checks are check-then-act — two CONCURRENT creators (a
-    * tag and a branch of one name) could each pass and both land,
-    * after which VERSION AS OF silently resolves the tag and shadows
-    * the branch. Both creators now race on ONE claim file via
-    * createLink (atomic create-if-absent), so the collision is
-    * detected atomically: the loser reads the winner's kind and
-    * refuses. Re-claiming the SAME kind succeeds (tags re-point;
-    * duplicate-branch detection stays on the ref link itself), which
-    * also makes a crash between claim and ref creation retryable.
-    * Legacy refs created before claims existed are still caught by the
-    * callers' direct checks — they already exist, so the concurrent-
-    * creation window this closes never applied to them. */
-  private def claimRef(root: String, name: String, kind: String): Unit = {
+  /** One lock object per ref-lock file, for the threads of this JVM. */
+  private val refLocks =
+    new java.util.concurrent.ConcurrentHashMap[Path, Object]()
+
+  /** Runs `body` holding the exclusive ref lock of `name`. Tags and
+    * branches share the VERSION AS OF namespace, and a creator's "no
+    * ref of the other kind exists" check followed by its ref write is
+    * check-then-act: two CONCURRENT creators (a tag and a branch of one
+    * name) could each pass and both land, after which VERSION AS OF
+    * silently resolves the tag and shadows the branch. Creators and
+    * drops therefore run check and write under one lock per name: an
+    * OS file lock on `_commits/<name>.reflock` across processes (held
+    * by the open channel, so a crashed holder releases it and leaves no
+    * stale lock to take over) plus a monitor across this JVM's threads
+    * (a JVM holds an OS file lock for all of its threads at once). The
+    * lock file itself is never deleted — deleting it would let a waiter
+    * lock an unlinked file while a newcomer locks a fresh one. */
+  private def withRefLock[T](root: String, name: String)(body: => T): T = {
     Files.createDirectories(commitsDir(root))
-    val p = refClaimPath(root, name)
-    val tmp = commitsDir(root).resolve(
-      s".tmp_claim_${ProcessHandle.current().pid()}_${stageSeq.incrementAndGet()}")
-    Files.write(tmp, kind.getBytes(UTF_8))
-    try Files.createLink(p, tmp)
-    catch {
-      case _: FileAlreadyExistsException =>
-        val existing = new String(Files.readAllBytes(p), UTF_8).trim
-        // a claim whose REF no longer exists is stale debris (a drop
-        // that crashed between deleting the ref and the claim) — the
-        // name is genuinely free, so take it over atomically instead
-        // of blocking it forever
-        val live = existing match {
-          case "branch" => branchFork(root, name).isDefined
-          case "tag" => tagVersion(root, name).isDefined
-          case _ => false
-        }
-        if (existing != kind && live) throw new IllegalStateException(
-          s"'$name' is a $existing of $root; tags and branches share the " +
-            "VERSION AS OF namespace")
-        if (existing != kind)
-          Files.move(tmp, p,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } finally Files.deleteIfExists(tmp)
+    val p = commitsDir(root).resolve(s"$name.reflock").toAbsolutePath.normalize
+    refLocks.computeIfAbsent(p, _ => new Object).synchronized {
+      val ch = java.nio.channels.FileChannel.open(p,
+        java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE)
+      try {
+        val lock = ch.lock()
+        try body finally lock.release()
+      } finally ch.close()
+    }
   }
 
   // --- NAMED BRANCHES (Iceberg-style refs, the branch-based WAP) ---------
@@ -1037,19 +1023,18 @@ object Snapshots {
     requireRefName(name)
     val head = maxCommitted(root)
     require(head > 0, s"cannot branch $root: nothing committed")
-    require(tagVersion(root, name).isEmpty,
-      s"'$name' is a TAG of $root; tags and branches share the " +
-        "VERSION AS OF namespace")
-    claimRef(root, name, "branch")
-    Files.createDirectories(branchManifestsDir(root, name))
-    val tmp = commitsDir(root).resolve(
-      s".tmp_branch_${ProcessHandle.current().pid()}_${stageSeq.incrementAndGet()}")
-    Files.write(tmp, head.toString.getBytes(UTF_8))
-    try Files.createLink(branchRefPath(root, name), tmp)
-    catch {
-      case _: FileAlreadyExistsException =>
-        throw new IllegalStateException(s"branch '$name' already exists under $root")
-    } finally Files.deleteIfExists(tmp)
+    withRefLock(root, name) {
+      if (tagVersion(root, name).isDefined) throw sharedNamespace(root, name, "TAG")
+      Files.createDirectories(branchManifestsDir(root, name))
+      val tmp = commitsDir(root).resolve(
+        s".tmp_branch_${ProcessHandle.current().pid()}_${stageSeq.incrementAndGet()}")
+      Files.write(tmp, head.toString.getBytes(UTF_8))
+      try Files.createLink(branchRefPath(root, name), tmp)
+      catch {
+        case _: FileAlreadyExistsException =>
+          throw new IllegalStateException(s"branch '$name' already exists under $root")
+      } finally Files.deleteIfExists(tmp)
+    }
     head
   }
 
@@ -1372,12 +1357,9 @@ object Snapshots {
 
   /** Drop the branch: ref and branch manifests go; its staged data
     * files become unreferenced and age out under the normal sweeps. */
-  def dropBranch(root: String, name: String): Unit = {
+  def dropBranch(root: String, name: String): Unit = withRefLock(root, name) {
     Files.deleteIfExists(branchRefPath(root, name))
     deleteRecursively(branchManifestsDir(root, name))
-    // release the shared-namespace claim: the name is reusable, by
-    // either kind
-    Files.deleteIfExists(refClaimPath(root, name))
   }
 
   /** (name, fork, head) of every branch under the root. */
