@@ -17,9 +17,9 @@ object PlanAudit {
         |group keys, whole-stage codegen end to end. At 100 TB the
         |shuffle carries one row per (partition, group) — ~dozens of
         |rows per task, never the fact rows. The final ORDER BY sorts
-        |over Coalesce 1 (small inputs: no range exchange, no sample
-        |job); past the advisory partition size it is a
-        |rangepartitioning exchange again.""".stripMargin,
+        |over Coalesce 1 (tiny inputs: no range exchange, no sample
+        |job); past AQE's min partition size (1 MB of scanned input)
+        |it is a rangepartitioning exchange again.""".stripMargin,
     "join_broadcast" ->
       """Fact⋈dim⋈dim. Expect: two BroadcastHashJoins (nation 25 rows,
         |region 5 rows) — zero shuffle of the customer side at any
@@ -52,7 +52,7 @@ object PlanAudit {
         |self-join → signature compare. No all-pairs stage anywhere;
         |candidate fan-in bounded by (band, source) bucket sizes. The
         |output ORDER BY runs over Coalesce 1 while the scanned inputs
-        |fit one advisory partition.""".stripMargin,
+        |total at most AQE's min partition size.""".stripMargin,
     "sim_cosine_topk" ->
       """Brute-force ANN baseline: probe set broadcast, candidates
         |stream, fused codegen dotproduct() per pair (custom Catalyst
@@ -912,7 +912,7 @@ object PlanAudit {
     sb.append(s"Scale factor: `$sfDir`. For each representative operator: the\n")
     sb.append("expectation we iterated toward, then the actual formatted plan.\n")
     sb.append("A root ORDER BY whose leaf inputs total at most\n")
-    sb.append("`spark.sql.adaptive.advisoryPartitionSizeInBytes` plans as\n")
+    sb.append("`spark.sql.adaptive.coalescePartitions.minPartitionSize` plans as\n")
     sb.append("`Sort` over `Coalesce 1` instead of a `rangepartitioning`\n")
     sb.append("exchange (`CoalesceSmallRootSort`, SCALE.md).\n")
     picks.foreach { case (name, commentary) =>

@@ -108,8 +108,7 @@ private[catalog] class ChangesTable(fullName: String, root: String)
     () => new Scan with Batch {
       override def readSchema(): StructType = full
       override def description(): String = s"graft change feed $fullName"
-      private lazy val stream =
-        new ChangesMicroBatchStream(root, dataSchema, options, batch = true)
+      private lazy val stream = new ChangesMicroBatchStream(root, dataSchema, options)
       override def toBatch: Batch = this
       override def planInputPartitions(): Array[InputPartition] = {
         val s0 = Option(options.get(GraftMicroBatchStream.StartingVersionOption))
@@ -161,7 +160,7 @@ private[catalog] object ChangePartition {
 }
 
 private[catalog] class ChangesMicroBatchStream(root: String,
-    dataSchema: StructType, options: CaseInsensitiveStringMap, batch: Boolean = false)
+    dataSchema: StructType, options: CaseInsensitiveStringMap)
   extends MicroBatchStream
   with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
   with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
@@ -380,11 +379,10 @@ private[catalog] class ChangesMicroBatchStream(root: String,
     require(oldest > 0, s"no committed snapshot under $root")
     require(s0 == 0 || s0 >= oldest,
       s"change-feed offset $s0 of $root is beyond retention (oldest " +
-        s"retained version is $oldest) — " + (
-        if (batch) "a batch startingVersion is EXCLUSIVE (the read returns " +
-          "the commits after it; Delta's table_changes is inclusive): pass " +
-          s"a version >= $oldest, or 0 for the initial snapshot"
-        else "restart from a fresh checkpoint"))
+        s"retained version is $oldest) — restart a stream from a fresh " +
+        "checkpoint; a batch read's startingVersion is EXCLUSIVE (the read " +
+        "returns the commits after it; Delta's table_changes is inclusive), " +
+        s"so pass a version >= $oldest, or 0 for the initial snapshot")
     val from = if (s0 == 0) oldest else s0
     val out = Seq.newBuilder[InputPartition]
     // commit wall-clock per version step, one metadata read

@@ -4,29 +4,33 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Repart
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.internal.SQLConf
 
-/** Runs a small query's final ORDER BY in one coalesced partition.
+/** Runs a tiny query, final ORDER BY included, in one task.
   *
   * A root global `Sort` plans as a range exchange: a `RangePartitioner`
   * sample job runs the whole child plan once, the range-shuffle map job
-  * runs it again, and only then does the sort run. When the plan's
-  * inputs fit in one AQE partition anyway, that is two extra jobs for
-  * nothing. This rule rewrites a root `Sort(global)` (or
-  * `Project(Sort(global))`) of a non-streaming plan to
-  * `Sort(global, Repartition(1, shuffle = false, child))`:
+  * runs it again, and only then does the sort run. This rule rewrites a
+  * root `Sort(global)` (or `Project(Sort(global))`) of a non-streaming
+  * plan to `Sort(global, Repartition(1, shuffle = false, child))`:
   * `CoalesceExec(1)` reports `SinglePartition`, which satisfies the
   * sort's `OrderedDistribution`, so no exchange is planned and the
   * child runs once.
   *
-  * The gate is the summed `sizeInBytes` of the sort child's LEAF
-  * relations against `spark.sql.adaptive.advisoryPartitionSizeInBytes`
-  * (the size AQE coalesces post-shuffle partitions to). Leaves, not the
-  * child's own estimate: joins estimate their output as the product of
-  * their inputs, so an output gate would refuse most small joins. The
-  * price is that a row-multiplying plan over small inputs sorts its
-  * whole output in one task; that sort spills through the external
-  * sorter like any other. A leaf of unknown size reports
-  * `spark.sql.defaultSizeInBytes` (8 EiB by default) and never
-  * qualifies.
+  * The price: `CoalesceExec(1)` adds no stage boundary, so the whole
+  * stage feeding the sort runs in ONE task (scan, filters, projections
+  * and UDFs, a broadcast join's probe side), not just the sort. The
+  * gate keeps that to plans too small for parallelism to pay: the
+  * summed `sizeInBytes` of the sort child's LEAF relations must be at
+  * most `spark.sql.adaptive.coalescePartitions.minPartitionSize` (1 MB
+  * by default), the smallest partition AQE coalesces shuffle output to,
+  * which under the default `parallelismFirst` is also the largest
+  * shuffle it reads in one partition. Leaves, not the child's own
+  * estimate: joins estimate their output as the product of their
+  * inputs, so an output gate would refuse most small joins. The leaf
+  * gate bounds the input, not the output, so a row-multiplying plan
+  * over tiny inputs sorts its whole output in one task; that sort
+  * spills through the external sorter like any other. A leaf of unknown
+  * size reports `spark.sql.defaultSizeInBytes` (8 EiB by default) and
+  * never qualifies.
   *
   * Only the ROOT sort of the plan being optimized moves: write and CTAS
   * commands (the command is the root), `orderBy().limit()`
@@ -44,7 +48,7 @@ object CoalesceSmallRootSort extends Rule[LogicalPlan] {
   private def qualifies(s: Sort): Boolean = s.global && (s.child match {
     case Repartition(1, false, _) => false // already rewritten
     case child => child.collectLeaves().map(_.stats.sizeInBytes).sum <=
-      BigInt(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
+      BigInt(conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
   })
 
   private def coalesce(s: Sort): Sort =

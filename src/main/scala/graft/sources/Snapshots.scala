@@ -954,7 +954,15 @@ object Snapshots {
     * stale lock to take over) plus a monitor across this JVM's threads
     * (a JVM holds an OS file lock for all of its threads at once). The
     * lock file itself is never deleted — deleting it would let a waiter
-    * lock an unlinked file while a newcomer locks a fresh one. */
+    * lock an unlinked file while a newcomer locks a fresh one.
+    *
+    * SCOPE: the exclusion holds only among writers that share one
+    * host's lock manager. An OS advisory lock does not exclude a
+    * creator on another host, and many shared filesystems honour it
+    * unreliably or not at all; object stores have no such lock. Unlike
+    * commits, which rest on atomic create-if-absent and so hold across
+    * hosts, a tag and a branch of one name created from two hosts at
+    * the same moment can both land. */
   private def withRefLock[T](root: String, name: String)(body: => T): T = {
     Files.createDirectories(commitsDir(root))
     val p = commitsDir(root).resolve(s"$name.reflock").toAbsolutePath.normalize
@@ -1357,9 +1365,14 @@ object Snapshots {
 
   /** Drop the branch: ref and branch manifests go; its staged data
     * files become unreferenced and age out under the normal sweeps. */
-  def dropBranch(root: String, name: String): Unit = withRefLock(root, name) {
-    Files.deleteIfExists(branchRefPath(root, name))
-    deleteRecursively(branchManifestsDir(root, name))
+  def dropBranch(root: String, name: String): Unit = {
+    requireRefName(name)
+    // nothing to drop takes no lock, so a no-op drop leaves no lock file
+    if (Files.exists(branchRefPath(root, name)) ||
+        Files.exists(branchManifestsDir(root, name))) withRefLock(root, name) {
+      Files.deleteIfExists(branchRefPath(root, name))
+      deleteRecursively(branchManifestsDir(root, name))
+    }
   }
 
   /** (name, fork, head) of every branch under the root. */

@@ -5,6 +5,7 @@ import java.util.concurrent.{CyclicBarrier, Executors, TimeUnit}
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Try}
 
 import graft.sources.Snapshots
@@ -44,5 +45,23 @@ class RefRaceSpec extends SparkSpec {
       pool.shutdown()
       pool.awaitTermination(10, TimeUnit.SECONDS)
     }
+  }
+
+  test("dropBranch refuses a malformed name and a no-op drop leaves no file") {
+    val root = Qx.tmpOut("refdrop", sf())
+    Snapshots.commit(root)(out =>
+      spark.range(3).selectExpr("id AS k").write.mode("append").parquet(out))
+    val commits = Paths.get(root, "_commits")
+    def listing = {
+      val ls = Files.list(commits)
+      try ls.iterator().asScala.map(_.getFileName.toString).toSet finally ls.close()
+    }
+    val before = listing
+    // the name reaches the path from SQL (CALL snap.system.drop_branch)
+    val e = intercept[IllegalArgumentException](Snapshots.dropBranch(root, "../escape"))
+    assert(e.getMessage.contains("ref name must be"), e.getMessage)
+    assert(!Files.exists(Paths.get(root, "escape.reflock")))
+    Snapshots.dropBranch(root, "nosuch")
+    assert(listing == before, s"a no-op drop changed $commits: $before -> $listing")
   }
 }

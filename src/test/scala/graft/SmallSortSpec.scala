@@ -47,7 +47,7 @@ class SmallSortSpec extends SparkSpec {
   /** Runs `body` with the rule's gate below any real input, so root
     * sorts plan through the range exchange as they would without it. */
   private def gateClosed[T](body: => T): T =
-    withConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES.key, "1")(body)
+    withConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE.key, "1")(body)
 
   /** Spark jobs one `collect()` of `df` runs. Counts only the jobs of
     * the collect's own SQL execution and waits for its end event, which
@@ -101,7 +101,7 @@ class SmallSortSpec extends SparkSpec {
     assert(got.sameElements(ranged), "coalesced sort must return the range-sorted rows in order")
   }
 
-  test("an advisory partition size below the input keeps the range exchange") {
+  test("a min partition size below the input keeps the range exchange") {
     gateClosed {
       val df = scanProjectSort()
       assert(jobsOf(df) > 1)
