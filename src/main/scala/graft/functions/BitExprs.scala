@@ -88,10 +88,11 @@ object BitExprs {
       (((x >> i) & 1L) << (2 * i)) | (((y >> i) & 1L) << (2 * i + 1))
     }.reduce(_ | _)
 
-  /** Register `interleave_bits(bigint, bigint) -> bigint` in the
-    * session's function registry (idempotent — check-before-register so
-    * repeated query construction doesn't spam "function replaced" WARNs). */
-  def register(spark: SparkSession): Unit =
-    Registry.ensure(spark, "interleave_bits", arity = 2,
-      exprs => InterleaveBits(exprs.head, exprs(1)))
+  /** `interleave_bits(bigint, bigint) -> bigint`. */
+  val interleaveBits =
+    SqlFunction("interleave_bits", 2, exprs => InterleaveBits(exprs.head, exprs(1)))
+
+  /** Register [[interleaveBits]] in the session's function registry
+    * (idempotent and synchronized through [[Registry]]). */
+  def register(spark: SparkSession): Unit = Registry.ensure(spark, interleaveBits)
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -110,14 +109,14 @@ object HashExprs {
     * through [[Registry]]): `lsh_bucket8(arr<double>) -> int`,
     * `simhash64(arr<string>) -> bigint`. */
   def register(spark: SparkSession): Unit = {
-    Registry.ensure(spark, "lsh_bucket8", arity = 1,
-      exprs => HyperplaneBucket(exprs.head))
-    Registry.ensure(spark, "lsh_bucket8b", arity = 1,
-      exprs => HyperplaneBucket(exprs.head, family = 1))
-    Registry.ensure(spark, "lsh_bucket8c", arity = 1,
-      exprs => HyperplaneBucket(exprs.head, family = 2))
-    Registry.ensure(spark, "simhash64", arity = 1,
-      exprs => SimHash64(exprs.head))
+    Registry.ensure(spark, SqlFunction("lsh_bucket8", 1,
+      exprs => HyperplaneBucket(exprs.head)))
+    Registry.ensure(spark, SqlFunction("lsh_bucket8b", 1,
+      exprs => HyperplaneBucket(exprs.head, family = 1)))
+    Registry.ensure(spark, SqlFunction("lsh_bucket8c", 1,
+      exprs => HyperplaneBucket(exprs.head, family = 2)))
+    Registry.ensure(spark, SqlFunction("simhash64", 1,
+      exprs => SimHash64(exprs.head)))
   }
 }
 

@@ -2,33 +2,45 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+
+/** A graft SQL function: its name, its arity and how it builds the
+  * expression. [[builder]] is the one arity gate, shared by the
+  * session registration ([[Registry.ensure]]) and the
+  * `spark.sql.extensions` injection ([[graft.plans.GraftExtensions]]):
+  * a wrong argument count raises Spark's standard
+  * wrong-number-of-arguments analysis error instead of an
+  * IndexOutOfBoundsException escaping the builder lambda. */
+final case class SqlFunction(name: String, arity: Int,
+    build: Seq[Expression] => Expression) {
+  def builder: Seq[Expression] => Expression = exprs => {
+    if (exprs.length != arity)
+      throw new org.apache.spark.sql.AnalysisException(
+        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+        messageParameters = Map("functionName" -> name,
+          "expectedNum" -> arity.toString,
+          "actualNum" -> exprs.length.toString,
+          "docroot" -> "https://spark.apache.org/docs/latest"))
+    build(exprs)
+  }
+
+  /** The `(identifier, info, builder)` triple `injectFunction` takes. */
+  def injectable: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(getClass.getName, name), builder)
+}
 
 /** THE session-function registration point shared by
   * [[VectorExprs]]/[[HashExprs]]/[[BitExprs]]: one synchronized
   * check-then-register (the 8-wide concurrent verify driver races an
   * unlocked guard and spams "replaced a previously registered function"
   * WARNs — the lock existed in one of the three twins and not the
-  * others) and one arity gate producing Spark's standard
-  * wrong-number-of-arguments analysis error instead of an
-  * IndexOutOfBoundsException escaping the builder lambda. */
-private[functions] object Registry {
+  * others). */
+private[graft] object Registry {
   private val lock = new Object
 
-  def ensure(spark: SparkSession, name: String, arity: Int,
-      build: Seq[Expression] => Expression): Unit = lock.synchronized {
+  def ensure(spark: SparkSession, fn: SqlFunction): Unit = lock.synchronized {
     val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier(name))) {
-      reg.createOrReplaceTempFunction(name, exprs => {
-        if (exprs.length != arity)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-            messageParameters = Map("functionName" -> name,
-              "expectedNum" -> arity.toString,
-              "actualNum" -> exprs.length.toString,
-              "docroot" -> "https://spark.apache.org/docs/latest"))
-        build(exprs)
-      }, "built-in")
-    }
+    if (!reg.functionExists(FunctionIdentifier(fn.name)))
+      reg.createOrReplaceTempFunction(fn.name, fn.builder, "built-in")
   }
 }

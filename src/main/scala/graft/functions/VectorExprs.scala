@@ -94,14 +94,11 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object VectorExprs {
-  /** Register `vec_dot(arr<double>, arr<double>) -> double` in the
-    * session's function registry (idempotent — check-before-register,
-    * so repeated query construction doesn't spam "function replaced"
-    * WARNs into the logs) so plans can use it via expr("vec_dot(a, b)").
-    * The check-then-register pair is synchronized: concurrent query
-    * construction (the 8-wide verify driver) would otherwise race the
-    * guard and spam "replaced a previously registered function" WARNs. */
-  def register(spark: SparkSession): Unit =
-    Registry.ensure(spark, "vec_dot", arity = 2,
-      exprs => DotProduct(exprs.head, exprs(1)))
+  /** `vec_dot(arr<double>, arr<double>) -> double`. */
+  val vecDot = SqlFunction("vec_dot", 2, exprs => DotProduct(exprs.head, exprs(1)))
+
+  /** Register [[vecDot]] in the session's function registry
+    * (idempotent and synchronized through [[Registry]]) so plans can use
+    * it via expr("vec_dot(a, b)"). */
+  def register(spark: SparkSession): Unit = Registry.ensure(spark, vecDot)
 }

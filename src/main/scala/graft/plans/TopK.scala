@@ -506,50 +506,21 @@ case class TopKPerGroupExec(
 /** `spark.sql.extensions=graft.plans.GraftExtensions` entry point. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectPlannerStrategy(_ => TopKStrategy)
-    e.injectPlannerStrategy(_ => AsOfStrategy)
-    e.injectOptimizerRule(_ => PushFilterThroughTopK)
-    e.injectOptimizerRule(_ => RewriteRowNumberTopK)
-    e.injectOptimizerRule(_ => CoalesceSmallRootSort)
-    // Scalar extension functions: any session built with this extensions
-    // class gets the codegen'd expressions on its SQL surface without a
-    // manual register call.
-    e.injectFunction(GraftExtensions.vecDot)
-    e.injectFunction(GraftExtensions.interleaveBits)
+    GraftExtensions.strategies.foreach(s => e.injectPlannerStrategy(_ => s))
+    GraftExtensions.rules.foreach(r => e.injectOptimizerRule(_ => r))
+    GraftExtensions.functions.foreach(f => e.injectFunction(f.injectable))
   }
 }
 
+/** The graft planner strategies, optimizer rules and SQL functions, in
+  * install order: the one list that both [[GraftExtensions]] and
+  * [[TopK.ensure]] install. */
 object GraftExtensions {
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-
-  /** Arity check producing Spark's standard wrong-number-of-arguments
-    * analysis error instead of an IndexOutOfBoundsException escaping
-    * the builder lambda. */
-  private def twoArgs(name: String, exprs: Seq[Expression]): Unit =
-    if (exprs.length != 2)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map("functionName" -> name,
-          "expectedNum" -> "2", "actualNum" -> exprs.length.toString,
-          "docroot" -> "https://spark.apache.org/docs/latest"))
-
-  private[plans] val vecDot =
-    (FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[graft.functions.DotProduct].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => {
-        twoArgs("vec_dot", exprs)
-        graft.functions.DotProduct(exprs.head, exprs(1)): Expression
-      })
-
-  private[plans] val interleaveBits =
-    (FunctionIdentifier("interleave_bits"),
-      new ExpressionInfo(classOf[graft.functions.InterleaveBits].getName,
-        "interleave_bits"),
-      (exprs: Seq[Expression]) => {
-        twoArgs("interleave_bits", exprs)
-        graft.functions.InterleaveBits(exprs.head, exprs(1)): Expression
-      })
+  val strategies: Seq[SparkStrategy] = Seq(TopKStrategy, AsOfStrategy)
+  val rules: Seq[Rule[LogicalPlan]] =
+    Seq(PushFilterThroughTopK, RewriteRowNumberTopK, CoalesceSmallRootSort)
+  val functions: Seq[graft.functions.SqlFunction] =
+    Seq(graft.functions.VectorExprs.vecDot, graft.functions.BitExprs.interleaveBits)
 }
 
 object TopK {
@@ -582,30 +553,16 @@ object TopK {
   val FinalOverflowKey = "spark.graft.topk.finalOverflow"
   val FinalOverflowDefault = "sort"
 
-  /** Idempotent runtime injection for sessions not built with
-    * [[GraftExtensions]] (e.g. a driver-owned session). Installs ALL
-    * graft planner/optimizer extensions (TopK + AsOf + the small
-    * root-sort coalesce). */
+  /** Idempotent runtime injection of [[GraftExtensions]]' list for
+    * sessions not built with the extensions class (e.g. a driver-owned
+    * session). */
   def ensure(spark: SparkSession): Unit = {
     val exp = spark.asInstanceOf[classic.SparkSession].experimental
     exp.synchronized {
-      if (!exp.extraStrategies.contains(TopKStrategy))
-        exp.extraStrategies = exp.extraStrategies :+ TopKStrategy
-      if (!exp.extraStrategies.contains(AsOfStrategy))
-        exp.extraStrategies = exp.extraStrategies :+ AsOfStrategy
-      if (!exp.extraOptimizations.contains(PushFilterThroughTopK))
-        exp.extraOptimizations = exp.extraOptimizations :+ PushFilterThroughTopK
-      if (!exp.extraOptimizations.contains(RewriteRowNumberTopK))
-        exp.extraOptimizations = exp.extraOptimizations :+ RewriteRowNumberTopK
-      if (!exp.extraOptimizations.contains(CoalesceSmallRootSort))
-        exp.extraOptimizations = exp.extraOptimizations :+ CoalesceSmallRootSort
+      exp.extraStrategies ++= GraftExtensions.strategies.filterNot(exp.extraStrategies.contains)
+      exp.extraOptimizations ++= GraftExtensions.rules.filterNot(exp.extraOptimizations.contains)
     }
-    // Keep the SQL-function surface in lockstep with the extensions
-    // class: ensure() is the runtime-injection twin of GraftExtensions,
-    // so a driver-owned session gets the same functions either way
-    // (both registrations are idempotent check-before-register).
-    graft.functions.VectorExprs.register(spark)
-    graft.functions.BitExprs.register(spark)
+    GraftExtensions.functions.foreach(graft.functions.Registry.ensure(spark, _))
   }
 
   /** Top-k rows per group of `df`, ranked by `orderKeys`

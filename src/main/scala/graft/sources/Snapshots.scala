@@ -69,7 +69,7 @@ object Snapshots {
 
   /** A resolved table version: the immutable file set of one commit,
     * plus any pending merge-on-read delete files ([[commitDelete]],
-    * [[commitUpsert]]). `fileSeq` maps CROSS-ROOT files (published by
+    * [[commitStagedDelta]]). `fileSeq` maps CROSS-ROOT files (published by
     * reference from another root, [[publishFrom]]) to their EFFECTIVE
     * sequence number in THIS root — the version the publish committed
     * at. A published file's own `v########` path segment carries the
@@ -372,7 +372,7 @@ object Snapshots {
         // scheme and a pre-widening sketch would wrongly refute
         // present keys. The read side mirrors this: only
         // canonicalizable types ever refute (see the catalog scan's
-        // `bloomHas` and [[readPointPruned]]).
+        // `bloomHas`).
         val canon = df.schema.fields.find(_.name == c).map(_.dataType) match {
           case Some(ByteType | ShortType | IntegerType | LongType) =>
             Some(col(c).cast(LongType))
@@ -814,65 +814,6 @@ object Snapshots {
       root = root, posDeletes = snap.posDeletes)
   }
 
-  /** POINT-LOOKUP head read: keep only the manifest files that might
-    * contain one of `values` for `col`, refuted by BOTH the recorded
-    * `[min, max]` bounds and — when the table opted into
-    * `graft.bloom.cols` — the per-file Bloom sidecars. The direct-API
-    * twin of the catalog scan's equality pruning: metadata + sidecar
-    * sketches only, no data I/O for refuted files; files without
-    * stats or sketch are always kept and the caller re-applies the
-    * real predicate (pruning is never the correctness carrier).
-    * Values must be integral or string (the sketched types). */
-  def readPointPruned(spark: SparkSession, root: String, col: String,
-      values: Seq[Any]): DataFrame = {
-    require(values.nonEmpty, "readPointPruned needs at least one value")
-    val snap = resolve(root).getOrElse(throw new IllegalStateException(
-      s"no committed snapshot under $root"))
-    def hashOf(v: Any): Option[Long] = try {
-      import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-      // canonical width, mirroring the sketch writer; values of types
-      // the writer does not sketch (decimal/binary/bool/…) hash to
-      // None → the sketch never refutes them (the writer skipped the
-      // column, but a stale/foreign sidecar must not lose rows either)
-      val cv: Option[Any] = v match {
-        case b: Byte => Some(b.toLong)
-        case s: Short => Some(s.toLong)
-        case i: Int => Some(i.toLong)
-        case l: Long => Some(l)
-        case f: Float => Some(f.toDouble)
-        case d: Double => Some(d)
-        case s: String => Some(s)
-        case u: org.apache.spark.unsafe.types.UTF8String => Some(u.toString)
-        case _ => None
-      }
-      cv.map(c => XxHash64(Seq(Literal(c)), 42L).eval().asInstanceOf[Long])
-    } catch { case _: Exception => None }
-    val hashes = values.map(hashOf)
-    def keep(f: String): Boolean = {
-      val rangeAdmits = snap.statsRaw.get(f).forall(body =>
-        values.exists(v => statsAdmitsRange(body, col, Some(v), Some(v))))
-      def bloomAdmits = {
-        val hasSketch = snap.blooms.get(f).exists(_.contains(col))
-        !hasSketch || {
-          val bf = try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(
-            Files.readAllBytes(Paths.get(bloomSidecar(f, col)))))
-          catch { case _: Exception => None }
-          bf.forall(b => hashes.exists(_.forall(b.mightContainLong)))
-        }
-      }
-      rangeAdmits && bloomAdmits
-    }
-    val kept = snap.files.filter(keep)
-    if (kept.isEmpty)
-      // see readStatsPruned: zero-file heads are legitimate and need
-      // the declared-schema empty frame, not a zero-path parquet read
-      if (snap.files.isEmpty) emptyFrame(spark, root)
-      else readWithDeletes(spark, snap.files, Nil, fileSeq = snap.fileSeq,
-        root = root).limit(0)
-    else readWithDeletes(spark, kept, snap.deletes, fileSeq = snap.fileSeq,
-      root = root, posDeletes = snap.posDeletes)
-  }
-
   /** Commit timestamp (µs since epoch, UTC) of a committed version, read
     * from its manifest's `#ts:` header; None for pre-header manifests.
     * One small metadata read — no data I/O. */
@@ -1110,7 +1051,9 @@ object Snapshots {
     * committers to one branch race on the link and the loser restages,
     * exactly like main. */
   def commitToBranch(root: String, name: String)(write: String => Unit): Long = {
-    require(branchFork(root, name).isDefined, s"no branch '$name' under $root")
+    val fork = branchFork(root, name)
+    require(fork.isDefined, s"no branch '$name' under $root")
+    finishPendingCleanup(root, name, fork.get)
     var attempt = 0
     while (true) {
       val v = branchHead(root, name) + 1
@@ -1184,13 +1127,17 @@ object Snapshots {
     * WITHOUT having linked anything (create a fresh branch from the new
     * head to retry). Afterwards the ref advances to the published
     * version and the branch keeps working (its next commit continues
-    * from there). A crash between the link and the ref/cleanup
-    * bookkeeping is detected on re-run (the head manifest is
-    * byte-identical to the recomputed squash) and finished
-    * idempotently. Returns the published main version (fork+1). */
+    * from there). A crash between the link and the ref advance is
+    * detected on re-run (the head manifest is byte-identical to the
+    * recomputed squash); a crash after the ref advance, while the
+    * branch-log copies are deleted, is detected by the copy at the
+    * ref's own version (see [[finishBranchPublish]]). Either way the
+    * re-run only finishes the bookkeeping. Returns the published main
+    * version (fork+1). */
   def fastForward(root: String, name: String): Long = {
     val fork = branchFork(root, name).getOrElse(throw new IllegalStateException(
       s"no branch '$name' under $root"))
+    if (finishPendingCleanup(root, name, fork)) return fork
     val bh = branchHead(root, name)
     require(bh > fork, s"branch '$name' has no commits to publish")
     val target = fork + 1
@@ -1204,7 +1151,7 @@ object Snapshots {
       // our own crashed publish (linked, died before bookkeeping)?
       if (Files.exists(manifestPath(root, target)) &&
           sameManifestBody(manifestPath(root, target), body0)) {
-        finishBranchPublish(root, name, fork, bh, target)
+        finishBranchPublish(root, name, bh, target)
         return target
       }
       throw new java.util.ConcurrentModificationException(
@@ -1252,7 +1199,7 @@ object Snapshots {
               s"took version $target — NOTHING was published; branch from " +
               "the new head and re-stage")
     } finally Files.deleteIfExists(tmp)
-    finishBranchPublish(root, name, fork, bh, target)
+    finishBranchPublish(root, name, bh, target)
     target
   }
 
@@ -1350,18 +1297,33 @@ object Snapshots {
 
   /** Post-link bookkeeping of a fast-forward: advance the ref to the
     * published version and drop the now-redundant branch-log copies.
-    * Idempotent — the crash-recovery path re-runs it. */
-  private def finishBranchPublish(root: String, name: String, fork: Long,
-      bh: Long, target: Long): Unit = {
+    * The copy at the published version (fork+1, the new ref) goes
+    * LAST: no branch commit ever lands at or below the ref, so while
+    * that copy exists every branch manifest belongs to the published
+    * batch, and a re-run after a crash here knows its squash already
+    * landed ([[finishPendingCleanup]]). Idempotent. */
+  private def finishBranchPublish(root: String, name: String, bh: Long,
+      target: Long): Unit = {
     val tmp = commitsDir(root).resolve(
       s".tmp_branch_${ProcessHandle.current().pid()}_${stageSeq.incrementAndGet()}")
     Files.write(tmp, target.toString.getBytes(UTF_8))
     Files.move(tmp, branchRefPath(root, name),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ((fork + 1) to bh).foreach(v =>
+    (((target + 1) to bh) :+ target).foreach(v =>
       Files.deleteIfExists(branchManifestPath(root, name, v)))
   }
+
+  /** Finish a fast-forward that crashed after advancing the ref: the
+    * branch-log copy at the ref's version marks it (see
+    * [[finishBranchPublish]]), and every branch manifest then belongs
+    * to the published batch. Deletes them, the marker last; true iff
+    * there was such a cleanup to finish. */
+  private def finishPendingCleanup(root: String, name: String, ref: Long): Boolean =
+    Files.exists(branchManifestPath(root, name, ref)) && {
+      finishBranchPublish(root, name, branchHead(root, name), ref)
+      true
+    }
 
   /** Drop the branch: ref and branch manifests go; its staged data
     * files become unreferenced and age out under the normal sweeps. */
@@ -2262,7 +2224,7 @@ object Snapshots {
     * Contract: `keyCol` must identify rows (a primary key). The delete
     * is SCOPED to the files present when it committed
     * ([[DeleteFile.coversBelow]], the sequence-number rule of Iceberg
-    * v2 equality deletes): a later append or [[commitUpsert]] that
+    * v2 equality deletes): a later append or [[commitStagedDelta]] that
     * re-adds the key IS visible — no rewrite needed first. */
   def commitDelete(root: String, keyCol: String)(write: String => Unit): Long =
     commitDelete(root, Seq(keyCol))(write)
@@ -2279,32 +2241,16 @@ object Snapshots {
   }
 
   /** Every `#del:@<v>:<key>:<path>` writer must reject names that
-    * break the line's 3-way split — shared by [[commitDelete]],
-    * [[commitUpsert]] and [[commitStagedDelta]] so a ':'-bearing key
+    * break the line's 3-way split — shared by [[commitDelete]]
+    * and [[commitStagedDelta]] so a ':'-bearing key
     * (legal SQL via backticks) can never silently corrupt a manifest. */
   private def requireKeyName(c: String): Unit =
     require(!c.contains(',') && !c.contains(':'),
       s"delete key column name must not contain ',' or ':' (manifest syntax): $c")
 
-  /** Subdirectory an upsert's writer stages its delete-key parquet
-    * under (the rest of the staging dir is the new data). */
+  /** Subdirectory a merge-on-read UPDATE stages its delete-key parquet
+    * under, beside the new data ([[commitStagedDelta]]). */
   val upsertDelSubdir = "_delkeys"
-
-  /** MERGE-ON-READ UPSERT, one atomic commit (the Hudi upsert shape):
-    * `write(stagingDir)` stages the REWRITTEN ROWS as data and the
-    * rewritten keys as a delete-key parquet under
-    * `stagingDir/_delkeys/`. The published manifest carries the
-    * parent's files + the new data files, plus a scoped `#del` line
-    * hiding the keys' OLD versions — the delete covers only files
-    * staged before this commit, so the new rows (staged AT this
-    * commit's version) shine through. Readers see pre- or post-upsert
-    * state, never a mix, and the upsert costs O(touched rows), never
-    * a table rewrite. */
-  def commitUpsert(root: String, keyCol: String)(write: String => Unit): Long = {
-    requireKeyName(keyCol)
-    commitImpl(root, carryForward = true, txn = None,
-      upsertKey = Some(keyCol))(write)
-  }
 
   /** RESTORE (Delta's `RESTORE TABLE ... TO VERSION AS OF`): publish a
     * NEW commit whose file list (and pending-delete lines) are exactly
@@ -2733,7 +2679,6 @@ object Snapshots {
   private def commitImpl(root: String, carryForward: Boolean,
       txn: Option[(String, Long)],
       stagedAsDeletes: Option[String] = None,
-      upsertKey: Option[String] = None,
       rowsUnchanged: Boolean = false)(write: String => Unit): Long = {
     // the attempt's own staging dir, discarded (and only it) on a lost
     // race before the retry re-stages
@@ -2759,38 +2704,26 @@ object Snapshots {
         if (v > 1L && (carryForward || stagedAsDeletes.isDefined))
           Some(resolveAt(root, v - 1))
         else None
-      // upsert staging splits on the _delkeys subdir: delete keys
-      // there, new data everywhere else in the staged dir
-      val (stagedDelKeys, stagedData) =
-        staged.partition(_.contains(s"/$upsertDelSubdir/"))
       val files = stagedAsDeletes match {
         case Some(_) => parent.getOrElse(throw new IllegalStateException(
           s"merge-on-read delete needs a committed table under $root")).files
-        case None => parent.map(_.files).getOrElse(Nil) ++ stagedData
+        case None => parent.map(_.files).getOrElse(Nil) ++ staged
       }
-      // pending deletes carry forward on append/delete/upsert commits;
-      // a full rewrite (carryForward = false) clears them — the
-      // rewrite materializes the surviving rows. New delete lines are
-      // SCOPED to this commit: they cover only files staged at
-      // versions < v, so an upsert's own rewritten rows (and any later
-      // append of a deleted key) stay visible.
-      val newDelFiles = stagedAsDeletes match {
-        case Some(k) => staged.map(DeleteFile(k, _, v))
-        case None => upsertKey.toSeq.flatMap(k => stagedDelKeys.map(DeleteFile(k, _, v)))
-      }
-      upsertKey.foreach { _ =>
-        require(stagedDelKeys.nonEmpty && stagedData.nonEmpty,
-          s"an upsert must stage both new rows and $upsertDelSubdir/ keys in $dataDir")
-      }
+      // pending deletes carry forward on append/delete commits; a
+      // full rewrite (carryForward = false) clears them — the rewrite
+      // materializes the surviving rows. New delete lines are SCOPED to
+      // this commit: they cover only files staged at versions < v, so
+      // any later append of a deleted key stays visible.
+      val newDelFiles = stagedAsDeletes.toSeq.flatMap(k => staged.map(DeleteFile(k, _, v)))
       // seq pins for carried cross-root (published) files survive every
       // carry-forward commit; a full rewrite drops them with the files
       val header = (if (rowsUnchanged) Seq(rowsUnchangedLine) else Nil) ++
         (parent.map(_.deletes).getOrElse(Nil) ++ newDelFiles).map(delLine) ++
         parent.map(p => seqLines(p.fileSeq, files)).getOrElse(Nil) ++
         parent.map(p => statsLines(p.statsRaw, files)).getOrElse(Nil) ++
-        (if (stagedAsDeletes.isDefined) Nil else newStatsLines(stagedData)) ++
+        (if (stagedAsDeletes.isDefined) Nil else newStatsLines(staged)) ++
         parent.map(p => bloomLines(p.blooms, files)).getOrElse(Nil) ++
-        (if (stagedAsDeletes.isDefined) Nil else newBloomLines(root, stagedData)) ++
+        (if (stagedAsDeletes.isDefined) Nil else newBloomLines(root, staged)) ++
         parent.map(p => posLines(p.posDeletes, files)).getOrElse(Nil)
       (txn.map { case (a, e) => s"#txn:$a:$e" }.toSeq, header, files)
     }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
 import graft.catalog.GraftCatalog
 import graft.sources.Snapshots
 
@@ -116,6 +118,50 @@ class Round20OpsSpec extends SparkSpec {
     assert(!Files.exists(branchDir.resolve("00000002.manifest")) &&
       !Files.exists(branchDir.resolve("00000003.manifest")),
       "branch-log copies cleaned up")
+  }
+
+  test("a crash after the ref advance, before the branch-log cleanup, finishes on re-run") {
+    val root = Qx.tmpOut("r20ffcleanup", sf())
+    Snapshots.commit(root)(out =>
+      spark.range(0, 30).selectExpr("id AS k").write.mode("append").parquet(out))
+    Snapshots.createBranch(root, "audit")
+    def branchCommit(a: Long, b: Long): Long = Snapshots.commitToBranch(root, "audit")(out =>
+      spark.range(a, b).selectExpr("id AS k").write.mode("append").parquet(out))
+    val branchDir = Paths.get(root, "_commits", "branch_audit")
+    def manifests(): Map[String, Array[Byte]] = {
+      val ls = Files.list(branchDir)
+      try ls.iterator().asScala.map(p => p.getFileName.toString -> Files.readAllBytes(p)).toMap
+      finally ls.close()
+    }
+    def restore(saved: Map[String, Array[Byte]]): Unit =
+      saved.foreach { case (n, bytes) => Files.write(branchDir.resolve(n), bytes) }
+    // two branch commits: after the ref moves to fork+1 the leftover
+    // copies put the branch head above the new ref
+    branchCommit(30, 40)
+    branchCommit(40, 50)
+    val batch1 = manifests()
+    assert(Snapshots.fastForward(root, "audit") == 2L)
+    // reconstruct the publisher that died after advancing the ref and
+    // before deleting any branch-log copy
+    restore(batch1)
+    assert(Snapshots.branchFork(root, "audit").contains(2L))
+    assert(Snapshots.branchHead(root, "audit") == 3L, "fixture: head above the ref")
+    assert(Snapshots.fastForward(root, "audit") == 2L, "the squash already landed")
+    assert(Snapshots.maxCommitted(root) == 2L, "no duplicate publish")
+    assert(ks(root) == (0L until 50L).toSet)
+    assert(manifests().isEmpty, "branch-log copies cleaned up")
+    // after the same crash a branch commit finishes the cleanup first
+    // and builds on the published state, not on the leftover copies
+    branchCommit(50, 60)
+    branchCommit(60, 70)
+    val batch2 = manifests()
+    assert(Snapshots.fastForward(root, "audit") == 3L)
+    restore(batch2)
+    assert(branchCommit(70, 80) == 4L)
+    assert(Snapshots.maxCommitted(root) == 3L)
+    assert(manifests().keySet == Set("00000004.manifest"))
+    assert(Snapshots.fastForward(root, "audit") == 4L)
+    assert(ks(root) == (0L until 80L).toSet)
   }
 
   test("crashed rewrite-squash publish with an empty diff finishes idempotently") {

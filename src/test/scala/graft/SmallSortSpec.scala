@@ -7,7 +7,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-import org.apache.spark.sql.{classic, DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Repartition, Sort}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan, TakeOrderedAndProjectExec}
@@ -17,7 +17,7 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.internal.SQLConf
 
 import graft.catalog.GraftCatalog
-import graft.plans.{CoalesceSmallRootSort, GraftExtensions, TopK}
+import graft.plans.CoalesceSmallRootSort
 
 /** [[CoalesceSmallRootSort]]: a small query's root ORDER BY runs in one
   * coalesced partition (no range-sample job, no range-shuffle map job),
@@ -79,7 +79,6 @@ class SmallSortSpec extends SparkSpec {
   }
 
   private def scanProjectSort(): DataFrame = {
-    TopK.ensure(spark)
     Tables.load(spark, sf(), "lineitem")
       .select($"l_orderkey", $"l_linenumber", ($"l_quantity" * 2).as("q2"))
       .orderBy($"q2".desc, $"l_orderkey", $"l_linenumber")
@@ -111,7 +110,6 @@ class SmallSortSpec extends SparkSpec {
   }
 
   test("Project(Sort) roots qualify; the rewrite is idempotent") {
-    TopK.ensure(spark)
     val df = Tables.load(spark, sf(), "orders")
       .orderBy($"o_totalprice".desc, $"o_orderkey").select($"o_orderkey")
     val opt = df.queryExecution.optimizedPlan
@@ -126,7 +124,6 @@ class SmallSortSpec extends SparkSpec {
   }
 
   test("orderBy().limit() stays TakeOrderedAndProject") {
-    TopK.ensure(spark)
     val df = Tables.load(spark, sf(), "lineitem")
       .orderBy($"l_extendedprice".desc, $"l_orderkey", $"l_linenumber").limit(5)
     df.collect()
@@ -136,7 +133,6 @@ class SmallSortSpec extends SparkSpec {
   }
 
   test("a leaf of unknown size never qualifies") {
-    TopK.ensure(spark)
     val rdd = spark.sparkContext.parallelize(1 to 100, 4)
     val df = spark.createDataFrame(rdd.map(i => (i, i % 7))).toDF("a", "b")
       .orderBy($"b", $"a")
@@ -166,7 +162,6 @@ class SmallSortSpec extends SparkSpec {
   }
 
   private def sortedWrites(): Unit = {
-    TopK.ensure(spark)
     def sorted = Tables.load(spark, sf(), "lineitem")
       .select($"l_orderkey", $"l_linenumber", $"l_extendedprice")
       .orderBy($"l_extendedprice", $"l_orderkey", $"l_linenumber")
@@ -191,19 +186,6 @@ class SmallSortSpec extends SparkSpec {
     val ctasFiles = ctas()
     assert(ctasFiles > 1, "a range-partitioned CTAS lands more than one file")
     assert(ctasFiles == gateClosed(ctas()))
-  }
-
-  test("GraftExtensions and TopK.ensure both install the rule") {
-    val ext = new SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    // buildOptimizerRules is private[sql] in Scala, public in bytecode
-    val rules = classOf[SparkSessionExtensions]
-      .getMethod("buildOptimizerRules", classOf[SparkSession])
-      .invoke(ext, spark).asInstanceOf[Seq[AnyRef]]
-    assert(rules.contains(CoalesceSmallRootSort))
-    TopK.ensure(spark)
-    assert(spark.asInstanceOf[classic.SparkSession].experimental.extraOptimizations
-      .contains(CoalesceSmallRootSort))
   }
 
   test("every root-sorted registered query whose inputs are small skips the range exchange") {

@@ -3,15 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session per suite (SURVEY §5 — one lazy SparkSession, UTC,
-  * small shuffle partitions, same confs as the driver's Verify). */
+/** Shared session per suite: [[GraftSession]]'s settings, the same
+  * ones `Bench`, `Verify` and `PlanAudit` run under. Four cores,
+  * because specs pin file and partition counts at 4. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.create(4)
 
   def sf(which: String = "0.001"): String = s"/root/testdata/sf$which"
 }

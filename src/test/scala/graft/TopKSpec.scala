@@ -158,7 +158,6 @@ class TopKSpec extends SparkSpec {
 
   test("SQL row_number<=k pattern replans to TopKPerGroup when rn is pruned") {
     import spark.implicits._
-    TopK.ensure(spark)
     Tables.load(spark, sf(), "part")
       .select($"p_brand", $"p_partkey", $"p_retailprice")
       .createOrReplaceTempView("topk_sql_part")
@@ -192,7 +191,6 @@ class TopKSpec extends SparkSpec {
 
   test("SQL rewrite does NOT fire when the rank column survives, or for rank()") {
     import spark.implicits._
-    TopK.ensure(spark)
     Tables.load(spark, sf(), "part")
       .select($"p_brand", $"p_partkey", $"p_retailprice")
       .createOrReplaceTempView("topk_sql_part2")
@@ -276,39 +274,59 @@ class TopKSpec extends SparkSpec {
     }
   }
 
-  test("GraftExtensions wires every graft strategy and rule for spark.sql.extensions") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.plans.GraftExtensions().apply(ext)
+  test("GraftExtensions and TopK.ensure install the one list of strategies, rules and functions") {
+    import graft.plans._
+    import org.apache.spark.sql.SparkSessionExtensions
+    // the one list, in install order
+    assert(GraftExtensions.strategies == Seq(TopKStrategy, AsOfStrategy))
+    assert(GraftExtensions.rules ==
+      Seq(PushFilterThroughTopK, RewriteRowNumberTopK, CoalesceSmallRootSort))
+    assert(GraftExtensions.functions.map(_.name) == Seq("vec_dot", "interleave_bits"))
+
+    // spark.sql.extensions path
+    val ext = new SparkSessionExtensions
+    new GraftExtensions().apply(ext)
     val cls = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     // build* are private[sql] in Scala but public in bytecode — invoke
     // reflectively rather than dropping the only coverage of the
     // spark.sql.extensions install path.
     def build(name: String): Seq[AnyRef] =
-      classOf[org.apache.spark.sql.SparkSessionExtensions]
+      classOf[SparkSessionExtensions]
         .getMethod(name, classOf[org.apache.spark.sql.SparkSession])
         .invoke(ext, cls).asInstanceOf[Seq[AnyRef]]
-    val strategies = build("buildPlannerStrategies")
-    assert(strategies.contains(graft.plans.TopKStrategy))
-    assert(strategies.contains(graft.plans.AsOfStrategy))
-    val rules = build("buildOptimizerRules")
-    assert(rules.contains(graft.plans.PushFilterThroughTopK))
-    assert(rules.contains(graft.plans.RewriteRowNumberTopK))
-    // the scalar extension functions ride the same entry point;
+    assert(build("buildPlannerStrategies") == GraftExtensions.strategies)
+    assert(build("buildOptimizerRules") == GraftExtensions.rules)
     // registerFunctions needs a live catalog, so assert on the
     // injected-builders list instead
-    val fnField = classOf[org.apache.spark.sql.SparkSessionExtensions]
+    val fnField = classOf[SparkSessionExtensions]
       .getDeclaredFields.find(_.getName.endsWith("injectedFunctions"))
       .getOrElse(fail("injectedFunctions field not found"))
     fnField.setAccessible(true)
-    val names = fnField.get(ext)
+    val injected = fnField.get(ext)
       .asInstanceOf[scala.collection.mutable.Buffer[(
-        org.apache.spark.sql.catalyst.FunctionIdentifier, _, _)]]
-      .map(_._1.funcName).toSet
-    assert(names == Set("vec_dot", "interleave_bits"), s"$names")
+        org.apache.spark.sql.catalyst.FunctionIdentifier, _,
+        Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
+          org.apache.spark.sql.catalyst.expressions.Expression)]]
+    assert(injected.map(_._1.funcName) == Seq("vec_dot", "interleave_bits"))
+    // the injected builders carry the arity gate
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      injected.head._3(Seq(org.apache.spark.sql.catalyst.expressions.Literal(1.0))))
+    assert(e.getMessage.contains("WRONG_NUM_ARGS"), e.getMessage)
+
+    // runtime path: idempotent, same order
+    TopK.ensure(spark)
+    TopK.ensure(spark)
+    val exp = cls.experimental
+    assert(exp.extraStrategies.filter(GraftExtensions.strategies.contains) ==
+      GraftExtensions.strategies)
+    assert(exp.extraOptimizations.filter(GraftExtensions.rules.contains) ==
+      GraftExtensions.rules)
+    GraftExtensions.functions.foreach(f => assert(
+      cls.sessionState.functionRegistry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(f.name)), f.name))
   }
 
   test("ensure() exposes the scalar extension functions on the plain SQL surface") {
-    graft.plans.TopK.ensure(spark)
     val r = spark.sql(
       "SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d, " +
         "interleave_bits(3L, 1L) AS z").head()
