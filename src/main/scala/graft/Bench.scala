@@ -47,7 +47,6 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
-    spark.sparkContext.setLogLevel("WARN")
     // Warm run at the smallest SF before timing: whole-stage-codegen
     // (janino) compiles each distinct plan shape once per JVM (~0.5-1 s
     // apiece) — without this, those one-time costs land arbitrarily on

@@ -24,6 +24,7 @@ object GraftSession {
       // serialized sort writer emits one file per map task.
       .config("spark.shuffle.sort.bypassMergeThreshold", "1")
       .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
     graft.plans.TopK.ensure(spark)
     spark
   }

@@ -11,7 +11,6 @@ object Verify {
       case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
     }
     val spark = GraftSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Dump concurrently (distinct output dir per query; one SparkSession
     // is thread-safe for concurrent actions) — halves the driver's

@@ -90,7 +90,7 @@ object BitExprs {
 
   /** `interleave_bits(bigint, bigint) -> bigint`. */
   val interleaveBits =
-    SqlFunction("interleave_bits", 2, exprs => InterleaveBits(exprs.head, exprs(1)))
+    SqlFunction("interleave_bits", 2)(exprs => InterleaveBits(exprs.head, exprs(1)))
 
   /** Register [[interleaveBits]] in the session's function registry
     * (idempotent and synchronized through [[Registry]]). */

@@ -109,13 +109,13 @@ object HashExprs {
     * through [[Registry]]): `lsh_bucket8(arr<double>) -> int`,
     * `simhash64(arr<string>) -> bigint`. */
   def register(spark: SparkSession): Unit = {
-    Registry.ensure(spark, SqlFunction("lsh_bucket8", 1,
+    Registry.ensure(spark, SqlFunction("lsh_bucket8", 1)(
       exprs => HyperplaneBucket(exprs.head)))
-    Registry.ensure(spark, SqlFunction("lsh_bucket8b", 1,
+    Registry.ensure(spark, SqlFunction("lsh_bucket8b", 1)(
       exprs => HyperplaneBucket(exprs.head, family = 1)))
-    Registry.ensure(spark, SqlFunction("lsh_bucket8c", 1,
+    Registry.ensure(spark, SqlFunction("lsh_bucket8c", 1)(
       exprs => HyperplaneBucket(exprs.head, family = 2)))
-    Registry.ensure(spark, SqlFunction("simhash64", 1,
+    Registry.ensure(spark, SqlFunction("simhash64", 1)(
       exprs => SimHash64(exprs.head)))
   }
 }

@@ -1,5 +1,7 @@
 package graft.functions
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -11,8 +13,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * a wrong argument count raises Spark's standard
   * wrong-number-of-arguments analysis error instead of an
   * IndexOutOfBoundsException escaping the builder lambda. */
-final case class SqlFunction(name: String, arity: Int,
-    build: Seq[Expression] => Expression) {
+final case class SqlFunction[E <: Expression](name: String, arity: Int)(
+    build: Seq[Expression] => E)(implicit cls: ClassTag[E]) {
   def builder: Seq[Expression] => Expression = exprs => {
     if (exprs.length != arity)
       throw new org.apache.spark.sql.AnalysisException(
@@ -26,7 +28,7 @@ final case class SqlFunction(name: String, arity: Int,
 
   /** The `(identifier, info, builder)` triple `injectFunction` takes. */
   def injectable: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier(name), new ExpressionInfo(getClass.getName, name), builder)
+    (FunctionIdentifier(name), new ExpressionInfo(cls.runtimeClass.getName, name), builder)
 }
 
 /** THE session-function registration point shared by
@@ -38,7 +40,7 @@ final case class SqlFunction(name: String, arity: Int,
 private[graft] object Registry {
   private val lock = new Object
 
-  def ensure(spark: SparkSession, fn: SqlFunction): Unit = lock.synchronized {
+  def ensure(spark: SparkSession, fn: SqlFunction[_]): Unit = lock.synchronized {
     val reg = spark.sessionState.functionRegistry
     if (!reg.functionExists(FunctionIdentifier(fn.name)))
       reg.createOrReplaceTempFunction(fn.name, fn.builder, "built-in")

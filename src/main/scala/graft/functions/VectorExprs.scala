@@ -95,7 +95,7 @@ case class DotProduct(left: Expression, right: Expression)
 
 object VectorExprs {
   /** `vec_dot(arr<double>, arr<double>) -> double`. */
-  val vecDot = SqlFunction("vec_dot", 2, exprs => DotProduct(exprs.head, exprs(1)))
+  val vecDot = SqlFunction("vec_dot", 2)(exprs => DotProduct(exprs.head, exprs(1)))
 
   /** Register [[vecDot]] in the session's function registry
     * (idempotent and synchronized through [[Registry]]) so plans can use

@@ -519,7 +519,7 @@ object GraftExtensions {
   val strategies: Seq[SparkStrategy] = Seq(TopKStrategy, AsOfStrategy)
   val rules: Seq[Rule[LogicalPlan]] =
     Seq(PushFilterThroughTopK, RewriteRowNumberTopK, CoalesceSmallRootSort)
-  val functions: Seq[graft.functions.SqlFunction] =
+  val functions: Seq[graft.functions.SqlFunction[_]] =
     Seq(graft.functions.VectorExprs.vecDot, graft.functions.BitExprs.interleaveBits)
 }
 

@@ -17,7 +17,6 @@ object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = graft.GraftSession.create(4)
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
     val root = Files.createTempDirectory("graft_stream_demo").toString

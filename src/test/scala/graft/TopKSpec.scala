@@ -304,10 +304,13 @@ class TopKSpec extends SparkSpec {
     fnField.setAccessible(true)
     val injected = fnField.get(ext)
       .asInstanceOf[scala.collection.mutable.Buffer[(
-        org.apache.spark.sql.catalyst.FunctionIdentifier, _,
+        org.apache.spark.sql.catalyst.FunctionIdentifier,
+        org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
         Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
           org.apache.spark.sql.catalyst.expressions.Expression)]]
     assert(injected.map(_._1.funcName) == Seq("vec_dot", "interleave_bits"))
+    assert(injected.map(_._2.getClassName) == Seq(
+      classOf[graft.functions.DotProduct], classOf[graft.functions.InterleaveBits]).map(_.getName))
     // the injected builders carry the arity gate
     val e = intercept[org.apache.spark.sql.AnalysisException](
       injected.head._3(Seq(org.apache.spark.sql.catalyst.expressions.Literal(1.0))))
