@@ -553,9 +553,8 @@ object TopK {
   val FinalOverflowKey = "spark.graft.topk.finalOverflow"
   val FinalOverflowDefault = "sort"
 
-  /** Idempotent runtime injection of [[GraftExtensions]]' list for
-    * sessions not built with the extensions class (e.g. a driver-owned
-    * session). */
+  /** Idempotent runtime injection of [[GraftExtensions]]' list into any
+    * session, including one built without the extensions class. */
   def ensure(spark: SparkSession): Unit = {
     val exp = spark.asInstanceOf[classic.SparkSession].experimental
     exp.synchronized {

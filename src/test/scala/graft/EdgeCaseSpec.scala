@@ -52,7 +52,6 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("interleave_bits propagates nulls and ignores bits above 16") {
-    graft.functions.BitExprs.register(spark)
     val r = spark.sql(
       "SELECT interleave_bits(CAST(NULL AS BIGINT), 1L) AS a, " +
         "interleave_bits(65537L, 0L) AS b, interleave_bits(1L, 0L) AS c").head()
@@ -136,7 +135,6 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("vec_dot custom expression matches interpreted fold and handles length skew") {
-    graft.functions.VectorExprs.register(spark)
     val df = Seq((Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0)),
                  (Seq(1.0, 2.0), Seq(4.0, 5.0, 6.0))).toDF("a", "b")
     val got = df.select(expr("vec_dot(a, b)")).as[Double].collect()

@@ -73,7 +73,6 @@ class InvariantSpec extends SparkSpec {
   }
 
   test("cosine(v, v) ≈ 1 through the vec_dot expression") {
-    graft.functions.VectorExprs.register(spark)
     for (seed <- 16 to 18) {
       val rnd = new Random(seed)
       val vecs = (1 to 50).map(i => (i.toLong, Seq.fill(64)(rnd.nextDouble() - 0.5)))

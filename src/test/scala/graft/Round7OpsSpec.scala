@@ -116,7 +116,6 @@ class Round7OpsSpec extends SparkSpec {
   test("interleave_bits: codegen twiddle == per-bit arithmetic reference, incl. edges") {
     import spark.implicits._
     import graft.functions.BitExprs
-    BitExprs.register(spark)
     val edges = Seq(0L, 1L, 2L, 0x5555L, 0xAAAAL, 0xFFFFL, 0x10000L, 123456789L)
     val pairs = for (x <- edges; y <- edges) yield (x, y)
     val got = pairs.toDF("x", "y")

@@ -42,7 +42,6 @@ class Round8OpsSpec extends SparkSpec {
   }
 
   test("interleave_bits coerces non-BIGINT args at analysis time") {
-    graft.functions.BitExprs.register(spark)
     // INT literals: implicit cast to BIGINT instead of a runtime
     // ClassCastException through constant folding
     val got = spark.sql("SELECT interleave_bits(3, 1) AS m").collect()(0).getLong(0)
