@@ -7,7 +7,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{classic, DataFrame, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Repartition, Sort}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan, TakeOrderedAndProjectExec}
@@ -17,7 +17,7 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.internal.SQLConf
 
 import graft.catalog.GraftCatalog
-import graft.plans.CoalesceSmallRootSort
+import graft.plans.{CoalesceSmallRootSort, GraftExtensions, TopK}
 
 /** [[CoalesceSmallRootSort]]: a small query's root ORDER BY runs in one
   * coalesced partition (no range-sample job, no range-shuffle map job),
@@ -186,6 +186,19 @@ class SmallSortSpec extends SparkSpec {
     val ctasFiles = ctas()
     assert(ctasFiles > 1, "a range-partitioned CTAS lands more than one file")
     assert(ctasFiles == gateClosed(ctas()))
+  }
+
+  test("GraftExtensions and TopK.ensure both install the rule") {
+    val ext = new SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    // buildOptimizerRules is private[sql] in Scala, public in bytecode
+    val rules = classOf[SparkSessionExtensions]
+      .getMethod("buildOptimizerRules", classOf[SparkSession])
+      .invoke(ext, spark).asInstanceOf[Seq[AnyRef]]
+    assert(rules.contains(CoalesceSmallRootSort))
+    TopK.ensure(spark)
+    assert(spark.asInstanceOf[classic.SparkSession].experimental.extraOptimizations
+      .contains(CoalesceSmallRootSort))
   }
 
   test("every root-sorted registered query whose inputs are small skips the range exchange") {

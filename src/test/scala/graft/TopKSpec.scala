@@ -274,7 +274,7 @@ class TopKSpec extends SparkSpec {
     }
   }
 
-  test("GraftExtensions and TopK.ensure install the one list of strategies, rules and functions") {
+  test("GraftExtensions wires every graft strategy and rule for spark.sql.extensions") {
     import graft.plans._
     import org.apache.spark.sql.SparkSessionExtensions
     // the one list, in install order
@@ -315,8 +315,11 @@ class TopKSpec extends SparkSpec {
     val e = intercept[org.apache.spark.sql.AnalysisException](
       injected.head._3(Seq(org.apache.spark.sql.catalyst.expressions.Literal(1.0))))
     assert(e.getMessage.contains("WRONG_NUM_ARGS"), e.getMessage)
+  }
 
-    // runtime path: idempotent, same order
+  test("TopK.ensure installs the same list, idempotently and in order") {
+    import graft.plans._
+    val cls = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     TopK.ensure(spark)
     TopK.ensure(spark)
     val exp = cls.experimental
